@@ -1,13 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 
-/** The reference's Flask query surface (reference: api/app.py)
-  * re-expressed as declarative Spark plans. Each of these is a
-  * filter/project/distinct over either a base table or a rollup —
-  * fully pushdown-friendly (point lookups and range filters reach the
-  * parquet scan as `PushedFilters`).
+/** The reference's Flask query surface (reference: api/app.py) as
+  * declarative Spark plans; filters reach the parquet scan as
+  * `PushedFilters`. Entity-pinned answers ([[aggTypes]], [[periodKeys]],
+  * [[dataRange]]) never sort globally: their filter pins `entity_id`,
+  * so hash-clustering on it puts the whole answer in ONE partition,
+  * whose `sortWithinPartitions` order is the order `collect` returns.
+  * A global `orderBy` would add a range-sample job rescanning the input
+  * for a result one partition already holds.
   */
 object ApiSurface {
 
@@ -19,13 +23,17 @@ object ApiSurface {
     * series (api/app.py:82-99).
     */
   def aggTypes(combined: DataFrame, entityId: Long): DataFrame =
-    combined.filter(col("entity_id") === entityId)
-      .select("agg_type").distinct().orderBy("agg_type")
+    pinnedKeys(combined, entityId, "agg_type")
 
   /** GET /api/period_keys/<company>?agg_type= (api/app.py:102-129). */
   def periodKeys(grainFrame: DataFrame, entityId: Long): DataFrame =
-    grainFrame.filter(col("entity_id") === entityId)
-      .select("period_key").distinct().orderBy("period_key")
+    pinnedKeys(grainFrame, entityId, "period_key")
+
+  /** One entity's distinct `key`s, ascending; distinct on (entity_id,
+    * key) reuses the entity_id clustering — one exchange in all. */
+  private def pinnedKeys(frame: DataFrame, entityId: Long, key: String): DataFrame =
+    frame.filter(col("entity_id") === entityId).repartition(col("entity_id"))
+      .select("entity_id", key).distinct().sortWithinPartitions(key).select(key)
 
   /** GET /api/data/<company>?agg_type=&start_period=&end_period= —
     * range scan over one series at one grain (api/app.py:24-79).
@@ -36,7 +44,7 @@ object ApiSurface {
                 start: String, end: String): DataFrame =
     grainFrame.filter(col("entity_id") === entityId &&
         col("period_key") >= start && col("period_key") <= end)
-      .orderBy("period_key")
+      .repartition(col("entity_id")).sortWithinPartitions("period_key")
 
   /** GET /api/data/<company>?agg_type=&period_key= — point lookup on
     * one grain (api/app.py:24-79, the period_key-equality branch).
@@ -63,30 +71,25 @@ object ApiSurface {
     * substring search + deterministic pagination + the response's
     * total_count (api/app.py:213-286).
     *
-    * Scale shape: a page is a small-k problem, so the global order is
-    * taken with `orderBy(...).limit(page·limit)` — a per-partition
-    * TakeOrdered + driver merge, never a single-partition global sort.
-    * Row numbers are then assigned on that ≤ page·limit-row bounded set
-    * (the window's single partition holds at most page·limit rows
-    * regardless of table size). total_count is a separate count over
-    * the filtered set, broadcast back via cross join — one extra
-    * scan+reduce, no shuffle of the data.
+    * One scan, one aggregate: `count` and a `CollectTopK` of the first
+    * page·limit rows by c_custkey. Only the tasks' ≤ page·limit-row
+    * buffers cross into the single-partition merge, at any table size;
+    * the merged array is sorted, so its `posexplode` position is the
+    * row number. No match or a page past the last yields no rows.
     */
   def reportList(customer: DataFrame, needle: String, page: Int, limit: Int): DataFrame = {
-    val filtered = customer
-      .filter(lower(col("c_name")).contains(needle.toLowerCase))
-      .select(col("c_custkey"), col("c_name"))
-    val total = filtered.agg(count(lit(1)).as("total_count"))
-    val topK = filtered.orderBy(col("c_custkey")).limit(page * limit)
-    // rn without any global window: the limited set is ≤ page·limit
-    // rows, so one partition is bounded by the page depth, and
-    // monotonically_increasing_id over the single sorted partition IS
-    // the row number (the sort key is total, so the order is unique)
-    topK.coalesce(1).sortWithinPartitions(col("c_custkey"))
-      .withColumn("rn", (monotonically_increasing_id() + 1).cast("int"))
-      .filter(col("rn") > (page - 1) * limit)
-      .crossJoin(broadcast(total))
-      .select(col("c_custkey"), col("c_name"), col("rn"), col("total_count"))
+    require(page >= 1 && limit >= 1, s"reportList: page and limit must be >= 1, got $page, $limit")
+    // reverse = true keeps the k SMALLEST structs, returned ascending;
+    // c_custkey leads the struct and is unique, so the order is total
+    val topK = GraftSqlBridge.column(new CollectTopK(
+      GraftSqlBridge.expression(struct(col("c_custkey"), col("c_name"))),
+      page * limit, true, 0, 0).toAggregateExpression())
+    customer.filter(lower(col("c_name")).contains(needle.toLowerCase))
+      .agg(count(lit(1)).as("total_count"), topK.as("top"))
+      .select(col("total_count"), posexplode(col("top")))
+      .filter(col("pos") >= (page - 1) * limit)
+      .select(col("col.c_custkey").as("c_custkey"), col("col.c_name").as("c_name"),
+        (col("pos") + 1).cast("int").as("rn"), col("total_count"))
   }
 
   /** GET /api/iqplus/news?search= — case-insensitive substring search,
@@ -116,8 +119,9 @@ object ApiSurface {
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
       .orderBy(order: _*)
       .limit(page * limit)
-    // rn without a global window (see reportList): bounded set, single
-    // sorted partition, monotonically_increasing_id = row number
+    // rn without a global window: the limited set is ≤ page·limit rows,
+    // so over its single sorted partition monotonically_increasing_id
+    // IS the row number (c_custkey makes the order total)
     topK.coalesce(1).sortWithinPartitions(order: _*)
       .withColumn("rn", (monotonically_increasing_id() + 1).cast("int"))
       .filter(col("rn") > (page - 1) * limit)

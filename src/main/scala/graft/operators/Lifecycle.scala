@@ -99,7 +99,7 @@ object Lifecycle {
     Seq("_upsert_commit", "_upsert_tmp", "_upsert_old").foreach { sfx =>
       fs.delete(new org.apache.hadoop.fs.Path(path.stripSuffix("/") + sfx), true)
     }
-    graft.sources.Sinks.writePartitionedClustered(
+    graft.sources.Sinks.writePartitioned(
       status.select(col("doc_id"), col("status")), path, Seq("status"))
   }
 

@@ -165,16 +165,16 @@ object Rollups {
     * Decimal and long columns round-trip parquet exactly, so a merge
     * after a read is as bit-exact as the in-memory one.
     *
-    * CLUSTERED write (repartition on month before `partitionBy`) so
-    * each month directory holds ONE file, not one per shuffle task:
-    * partials are tiny (a row per entity-day) and a probe that lists
+    * CLUSTERED write (`writePartitioned` rebalances on month): one file
+    * per month up to AQE's advisory partition size, not one per shuffle
+    * task. Partials are tiny (a row per entity-day) and a probe that lists
     * 80 months × 32 fragment files spends more time in file discovery
     * than in the merge — measured 3× slower than recomputing from raw
     * orders before compaction. One file per partition is the layout
     * that makes the persisted index cheaper than its recompute twin.
     */
   def writeDailyPartials(s: DataFrame, path: String): Unit =
-    graft.sources.Sinks.writePartitionedClustered(
+    graft.sources.Sinks.writePartitioned(
       dailyPartials(s).withColumn("month", substring(col("period_key"), 1, 7)),
       path, Seq("month"))
 

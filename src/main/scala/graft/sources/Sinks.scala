@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Load-stage sinks: partitioned parquet layout.
   *
@@ -13,25 +14,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `WHERE period_key = X` scan touches only that directory. At 100 TB
   * this is the difference between a full scan and a point read.
   *
-  * The writer keeps one shuffle-free pass: `partitionBy` splits files
-  * within each task. For very high-cardinality partition columns,
-  * repartition on them first so each task writes few files (small-file
-  * avoidance).
+  * A partitioned write REBALANCEs on its partition columns first, so
+  * AQE merges small partitions and splits skewed ones: a directory gets
+  * a file per advisory-size slice, not per input task (4 tasks × 5
+  * values: 5 files, not 20). An unpartitioned write is a plain pass
+  * that keeps its input's file layout and so its min/max pruning.
   */
 object Sinks {
 
   /** Write `df` as parquet partitioned by `partitionCols`. */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Write pre-clustered: repartition on the partition columns first so
-    * each output directory is written by few tasks (bounds file count
-    * at high partition cardinality).
-    */
-  def writePartitionedClustered(df: DataFrame, path: String,
-                                partitionCols: Seq[String]): Unit =
-    df.repartition(partitionCols.map(df.col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    val rows = if (partitionCols.isEmpty) df else df.hint("rebalance", partitionCols.map(col): _*)
+    rows.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+  }
 
   /** Read a partitioned table back (partition columns are recovered
     * from the directory layout and prune on filter).

@@ -12,8 +12,11 @@ class PlanGuardSpec extends SparkSpec {
   // SinglePartition, each with a bounded-size argument:
   //  - hll_cardinality / quantile_sketch: global one-row sketch merge
   //    (kilobytes into the final reduce)
-  //  - api_paginate / api_report_list: page-bounded rn assignment
-  //    (≤ page·limit rows on the single partition, by construction)
+  //  - api_paginate: page-bounded rn assignment (≤ page·limit rows on
+  //    the single partition, by construction)
+  //  - api_report_list: the final merge of the count + top-k
+  //    aggregate — each task sends one row holding a ≤ page·limit
+  //    top-k buffer, never data
   //  - sample_target_mix / sample_temperature: window over the L-row
   //    language-count frame
   //  - tfidf_top_terms: the one-row global doc count (idf numerator),
@@ -141,9 +144,6 @@ class PlanGuardSpec extends SparkSpec {
     // skew_report: the one-row grand-total frame cross-joined back
     // onto the per-key counts
     "skew_report",
-    // api_report_list: the one-row total_count frame cross-joined onto
-    // the ≤ page·limit result page
-    "api_report_list",
     // tfidf_top_terms / rarity_score / mix_token_budget / user_rfm /
     // bm25_topk: one-row corpus-stats frames cross-joined back (the
     // same bounded reduces allowlisted for SinglePartition above)
@@ -212,10 +212,10 @@ class PlanGuardSpec extends SparkSpec {
   // shape (it serializes a whole stage through one task WITHOUT even
   // showing up as an Exchange) — acceptable only on provably bounded
   // row sets:
-  //  - api_paginate / api_report_list: rn assignment on the
-  //    ≤ page·limit-row TakeOrdered result — the single partition
-  //    holds one page, never data
-  private val coalesceOneOk = Set("api_paginate", "api_report_list")
+  //  - api_paginate: rn assignment on the ≤ page·limit-row
+  //    TakeOrdered result — the single partition holds one page,
+  //    never data
+  private val coalesceOneOk = Set("api_paginate")
   // "Coalesce 1" not followed by another digit (don't match Coalesce 16)
   private val coalesceOne = "Coalesce 1(?![0-9])".r
 
